@@ -21,7 +21,7 @@ can't change between passes, so ratio spread far from 1 on untouched
 queries marks a noisy window, not a regression.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the cores this process may use),
      PTS_BENCH_DOCS (override corpus size),
      PTS_BENCH_OUT (work dir, default /dev/shm/pts_bench),
      PTS_BENCH_PASSES (default 2; 1 for quick iteration),
@@ -45,7 +45,7 @@ from processor_post_timeseries_spark.plans.pipeline import (  # noqa: E402
     PipelineConfig,
     run_pipeline,
 )
-from processor_post_timeseries_spark.session import get_spark  # noqa: E402
+from processor_post_timeseries_spark.session import default_cpus, get_spark  # noqa: E402
 from processor_post_timeseries_spark.sources.synth import sequences  # noqa: E402
 
 # contract queries worth timing per-round (cover scan/join/window/dedup/ann)
@@ -187,7 +187,7 @@ def run_pass(spark, seq, sf_dir: str, work: str, cpus: int, bench_queries, qs):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     n_docs = int(os.environ.get("PTS_BENCH_DOCS", str(max(int(40_000 * sf * 25), 500))))
     n_passes = max(int(os.environ.get("PTS_BENCH_PASSES", "2")), 1)

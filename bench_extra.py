@@ -10,7 +10,7 @@ Usage:
     python bench_extra.py plan  q1 q2 ...     # write plans/r06/<q>_<tag>.txt
     python bench_extra.py both  q1 q2 ...
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-     SPARK_GRAFT_CPUS (default 32)
+     SPARK_GRAFT_CPUS (default: the cores this process may use)
      PTS_EXTRA_REPEATS (default 3)
      PTS_EXTRA_TAG (plan file suffix, default "before")
 """
@@ -25,14 +25,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from processor_post_timeseries_spark import contract  # noqa: E402
-from processor_post_timeseries_spark.session import get_spark  # noqa: E402
+from processor_post_timeseries_spark.session import default_cpus, get_spark  # noqa: E402
 
 
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     repeats = int(os.environ.get("PTS_EXTRA_REPEATS", "3"))
     tag = os.environ.get("PTS_EXTRA_TAG", "before")
     plan_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")

@@ -12,17 +12,19 @@ Dynamic partition overwrite makes the recompute idempotent; untouched
 partitions are never read or rewritten.
 
 The checkpoint table is tiny by construction (one row per partition per
-stage), so the filter-rewrite materializes through the driver. A crash
-between delete and rewrite degrades to a MISSING checkpoint — the safe
-direction (resume recomputes more, never serves stale lineage).
+stage), so the delete reads it once through the driver and writes the
+kept rows back from a local relation. The rewrite goes to a sibling
+directory that is swapped in by rename (``lineage.drop_checkpoint_rows``):
+a crash at any point leaves either the old table or the new one, never a
+missing or partial one, so no other unit's done rows are lost.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .lineage import CKPT_SCHEMA, _ckpt_path, read_checkpoint
+from .lineage import drop_checkpoint_rows
 
 
 def invalidate_units(
@@ -33,7 +35,7 @@ def invalidate_units(
 ) -> int:
     """Remove done-rows for exact (stage, partition_key) pairs. Returns
     how many checkpoint rows were deleted."""
-    return _rewrite_without(
+    return drop_checkpoint_rows(
         spark,
         root,
         (F.col("stage") == stage) & F.col("partition_key").isin(partition_keys),
@@ -56,20 +58,5 @@ def invalidate_where(
     )
     if stages is not None:
         cond = cond & F.col("stage").isin(stages)
-    return _rewrite_without(spark, root, cond)
+    return drop_checkpoint_rows(spark, root, cond)
 
-
-def _rewrite_without(spark: SparkSession, root: str, cond) -> int:
-    ck = read_checkpoint(spark, root)
-    rows = ck.collect()  # tiny by construction (see module docstring)
-    keep_df = spark.createDataFrame(rows, CKPT_SCHEMA).filter(~cond)
-    keep = keep_df.collect()
-    removed = len(rows) - len(keep)
-    if removed:
-        (
-            spark.createDataFrame(keep, CKPT_SCHEMA)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(_ckpt_path(root))
-        )
-    return removed

@@ -16,7 +16,6 @@ the second time).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -133,15 +132,3 @@ def compact_partitions(
         .parquet(path)
     )
     return plan
-
-
-def compact_pipeline_output(
-    spark: SparkSession, out_dir: str, target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES
-) -> dict[str, CompactionPlan]:
-    """Compact the rollup pipeline's stage tables in place."""
-    plans = {}
-    for stage, cols in (("blocks", ["source", "bucket"]), ("tiers", ["tier", "source", "bucket"])):
-        p = os.path.join(out_dir, stage)
-        if os.path.isdir(p):
-            plans[stage] = compact_partitions(spark, p, cols, target_file_bytes)
-    return plans

@@ -10,15 +10,18 @@ The engine's flagship plan (reference lifecycle §3.1 re-expressed):
          each tier written partitionBy(source, bucket)  (narrow maps)
       -> checkpoint rows per (source, bucket) per stage (lineage.py)
 
-Every stage is independently resumable: inputs are filtered through the
-checkpoint anti-join, outputs land with dynamic partition overwrite
-(idempotent re-write), lineage is computed from read-back files.
+Every stage is independently resumable: the checkpoint's done keys are
+read once into a driver-side set, the input is filtered to the pending
+work units, outputs land with dynamic partition overwrite (idempotent
+re-write), and lineage is computed from read-back files.
 
-Shuffle census at 100 TB: ZERO wide dependencies in the whole pipeline —
-blocks and every tier are per-row maps after the one optional
-``repartition(source, bucket)`` used to shape output files. The only
-shuffles in the system are (a) that explicit repartition, (b) cross-doc
-summary stats (tiny), (c) lineage groupBys over already-reduced outputs.
+Shuffle census: the per-row stages (blocks, every tier) add no wide
+dependency of their own. The exchanges are (a) one
+``repartition(shuffle.partitions, *partition cols)`` per stage that
+shapes the sink (one task owns each output dir, so one file per dir),
+(b) on resume, one distinct over the input's (source, bucket) units
+(two small columns), and (c) the lineage groupBys over the
+already-reduced read-back of the partitions a run wrote.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.blocks import to_blocks
 from ..operators.partitioning import DEFAULT_BUCKETS, with_bucket
@@ -71,15 +75,23 @@ def _write_stage(
     stage: str,
     df: DataFrame,
     key_cols: list[str] = ("source", "bucket"),
+    part_cols: list[str] | None = None,
     record_threads: list | None = None,
-    keys_from: DataFrame | None = None,
-) -> DataFrame:
+) -> None:
     """Write one stage partition-first + record lineage from read-back.
 
+    The write is shuffled to ``spark.sql.shuffle.partitions`` tasks by the
+    partition columns ``part_cols`` (default ``key_cols``): one task owns
+    each output dir, so each dir gets one file, and the work is spread
+    over the cores. The explicit count matters: AQE would coalesce a
+    plain ``repartition(cols)`` by bytes, and a few MB of tier rows would
+    collapse into one task that writes every dir alone.
+
     Lineage rows cover only the partitions THIS run wrote (a resumed run
-    must not re-attribute earlier runs' partitions), so the read-back is
-    semi-joined on the just-written keys — a broadcast of a tiny key set,
-    and the parquet scan prunes to those partitions.
+    must not re-attribute earlier runs' partitions). Their keys are
+    observed during the write, with the row count, so finding them costs
+    no job; the read-back is filtered to them on the partition columns,
+    so its scan prunes to those partitions.
 
     When ``record_threads`` is given, the lineage job (a scan+groupBy of
     the just-written, already-reduced files) runs as a concurrent Spark
@@ -93,28 +105,36 @@ def _write_stage(
 
     path = f"{cfg.out_dir}/{stage}"
     key_cols = list(key_cols)
+    part_cols = list(part_cols or key_cols)
     obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-    # align task partitioning with the sink layout: without this every
-    # task writes a file into every (source, bucket) dir it touches ->
-    # tasks × partitions tiny files; with it, one task owns few dirs
-    df.repartition(*key_cols).write.mode("overwrite").partitionBy(*key_cols).parquet(path)
+    df = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows_written"),
+        F.collect_set(F.struct(*key_cols)).alias("_keys"),
+    )
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    (
+        df.repartition(n_tasks, *part_cols)
+        .write.mode("overwrite")
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
     try:
-        cfg.metrics[stage] = obs.get
+        metrics = obs.get
     except Exception:
         # a zero-row write never materializes its observation row (Spark
         # asserts in toPyRow); an empty stage is a valid no-op
-        cfg.metrics[stage] = {"rows_written": 0}
-    # partition keys this run wrote, WITHOUT re-executing the stage plan:
-    # derived from the (column-pruned) stage input, whose key set equals
-    # the output's (bucket is a pure function of doc_id)
-    keys = (keys_from if keys_from is not None else df).select(*key_cols).distinct()
-    try:
-        written = spark.read.parquet(path)
-    except Exception:
-        # a zero-row stage leaves no data files to read back — nothing to
-        # certify, so no lineage rows (resume will re-attempt the keys)
-        return df.limit(0)
+        metrics = {"rows_written": 0, "_keys": []}
+    keys = metrics.pop("_keys")
+    cfg.metrics[stage] = metrics
+    if not keys:
+        return  # nothing written, nothing to certify
+    # the read-back's schema is the written one: data columns, then the
+    # partition columns; giving it skips a footer-inference job
+    schema = T.StructType(
+        [f for f in df.schema if f.name not in part_cols] + [df.schema[c] for c in part_cols]
+    )
+    written = spark.read.schema(schema).parquet(path)
 
     def _record() -> None:
         lineage.record_stage(
@@ -127,12 +147,16 @@ def _write_stage(
         t = threading.Thread(target=_record, name=f"lineage-{stage}")
         t.start()
         record_threads.append(t)
-    return written
 
 
 def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) -> dict[str, str]:
     """Execute all stages (skipping checkpointed partitions). Returns
     {stage: output_path}.
+
+    On resume, the input's (source, bucket) work units and the
+    checkpoint's done keys are each read once into a driver-side set;
+    every stage's pending units follow from them without another job, and
+    a stage with none left is skipped.
 
     The blocks stage and the tier cascade are independent DAGs over the
     same input, so by default they run as CONCURRENT Spark jobs (tiers
@@ -147,38 +171,39 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     import threading
 
     seq = with_bucket(seq_df, cfg.n_buckets)
+    if cfg.resume:
+        units = [
+            lineage.unit_key(r)
+            for r in seq.select("source", "bucket").distinct().collect()
+        ]
+        done = lineage.done_keys(spark, cfg.out_dir)
     out: dict[str, str] = {}
     blocks_err: list[BaseException] = []
     record_threads: list = []
+
+    def pending(stage: str, prefixes: list[str] = ("",)) -> DataFrame | None:
+        """``seq`` without the units whose ``prefix + unit`` keys are all
+        done in ``stage``; None when no unit is left."""
+        if not cfg.resume:
+            return seq
+        ok = done.get(stage, set())
+        todo = [u for u in units if not all(p + u in ok for p in prefixes)]
+        if not todo:
+            return None
+        if len(todo) == len(units):
+            return seq
+        return seq.filter(lineage.pk_col(["source", "bucket"]).isin(sorted(todo)))
 
     if cfg.fused_ingest:
         from .ingest import fused_ingest
 
         stage = "ingest"
-        pending = (
-            lineage.pending_only(seq, spark, cfg.out_dir, stage, ["source", "bucket"])
-            if cfg.resume
-            else seq
-        )
-        if not cfg.resume or not pending.isEmpty():
+        todo = pending(stage)
+        if todo is not None:
             ing = with_bucket(
-                fused_ingest(pending.drop("bucket"), cfg.tiers, cfg.block_size),
-                cfg.n_buckets,
+                fused_ingest(todo.drop("bucket"), cfg.tiers, cfg.block_size), cfg.n_buckets
             )
-            path = f"{cfg.out_dir}/{stage}"
-            ing.repartition("source", "bucket").write.mode("overwrite").partitionBy(
-                "kind", "source", "bucket"
-            ).parquet(path)
-            written = spark.read.parquet(path)
-            lineage.record_stage(
-                spark,
-                cfg.out_dir,
-                stage,
-                written,
-                ["source", "bucket"],
-                cfg.run_id,
-                only_keys=pending.select("source", "bucket").distinct(),
-            )
+            _write_stage(spark, cfg, stage, ing, part_cols=["kind", "source", "bucket"])
         out[stage] = f"{cfg.out_dir}/{stage}"
         out["blocks"] = f"{cfg.out_dir}/{stage}/kind=block"
         out["tiers"] = f"{cfg.out_dir}/{stage}/kind=tier"
@@ -192,20 +217,10 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
                 # without this, FIFO lets whichever job submits first hog
                 # every slot and the other stage stalls behind it
                 spark.sparkContext.setLocalProperty("spark.scheduler.pool", "blocks")
-            stage = "blocks"
-            pending = (
-                lineage.pending_only(seq, spark, cfg.out_dir, stage, ["source", "bucket"])
-                if cfg.resume
-                else seq
-            )
-            # the isEmpty probe is only needed on resume (a fresh run's
-            # input is known non-empty by the caller); it costs a serial
-            # job that hurts scaling efficiency
-            if not cfg.resume or not pending.isEmpty():
-                blocks = to_blocks(pending.drop("bucket"), cfg.block_size)
-                blocks = with_bucket(blocks, cfg.n_buckets)
-                _write_stage(spark, cfg, stage, blocks,
-                             record_threads=record_threads, keys_from=pending)
+            todo = pending("blocks")
+            if todo is not None:
+                blocks = with_bucket(to_blocks(todo.drop("bucket"), cfg.block_size), cfg.n_buckets)
+                _write_stage(spark, cfg, "blocks", blocks, record_threads=record_threads)
         except BaseException as e:  # surface on the caller thread
             blocks_err.append(e)
 
@@ -223,31 +238,11 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     # -- stage: tiers (fused cascade, one pass over raw) ------------------
     stage = "tiers"
     tier_names = [name for name, _f in cfg.tiers]
-    if cfg.resume:
-        # lineage keys are (tier, source, bucket); a work unit (source,
-        # bucket) is done only when EVERY tier's row is checkpointed
-        ck = lineage.read_checkpoint(spark, cfg.out_dir).filter(
-            (F.col("stage") == stage) & (F.col("status") == "done")
-        )
-        parts = F.split("partition_key", "/")
-        done_sb = (
-            ck.select(parts[0].alias("tier"), parts[1].alias("source"), parts[2].alias("bucket"))
-            .groupBy("source", "bucket")
-            .agg(F.countDistinct("tier").alias("nt"))
-            .filter(F.col("nt") >= len(tier_names))
-            .select(F.concat_ws("/", "source", "bucket").alias("_pk"))
-        )
-        pending = (
-            seq.withColumn("_pk", F.concat_ws("/", F.col("source"), F.col("bucket").cast("string")))
-            .join(F.broadcast(done_sb), "_pk", "left_anti")
-            .drop("_pk")
-        )
-    else:
-        pending = seq
-    if not cfg.resume or not pending.isEmpty():
-        tiers = with_bucket(fused_tiers(pending.drop("bucket"), cfg.tiers), cfg.n_buckets)
-        tier_dim = spark.createDataFrame([(n,) for n in tier_names], "tier string")
-        keys_df = pending.select("source", "bucket").distinct().crossJoin(tier_dim)
+    # lineage keys are (tier, source, bucket); a work unit (source,
+    # bucket) is done only when EVERY tier's row is checkpointed
+    todo = pending(stage, [f"{t}/" for t in tier_names])
+    if todo is not None:
+        tiers = with_bucket(fused_tiers(todo.drop("bucket"), cfg.tiers), cfg.n_buckets)
         _write_stage(
             spark,
             cfg,
@@ -255,7 +250,6 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
             tiers,
             key_cols=["tier", "source", "bucket"],
             record_threads=record_threads,
-            keys_from=keys_df,
         )
     out[stage] = f"{cfg.out_dir}/{stage}"
     for name in tier_names:
@@ -269,8 +263,3 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     if blocks_err:
         raise blocks_err[0]
     return out
-
-
-def pipeline_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Checkpoint-table metrics view: rows/checksums per stage+partition."""
-    return lineage.read_checkpoint(spark, out_dir).orderBy("stage", "partition_key")

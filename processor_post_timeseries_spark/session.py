@@ -36,6 +36,13 @@ def package_zip() -> str:
     return out
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` when set, else the cores this process may run
+    on (its CPU affinity), so a bare run never oversubscribes the host."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "pts-spark",
     master: str | None = None,
@@ -44,10 +51,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the bench harness can pin parallelism for the N-vs-4N scaling runs.
+    ``master`` defaults to ``local[default_cpus()]``: ``$SPARK_GRAFT_CPUS``
+    (so the bench harness can pin parallelism for the N-vs-4N scaling
+    runs), else the cores the process may use.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

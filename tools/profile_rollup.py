@@ -3,7 +3,7 @@
 OPTIMIZATION_r06.md.
 
 Usage: python tools/profile_rollup.py [n_docs]
-Env: SPARK_GRAFT_CPUS (default 32), PTS_BENCH_OUT (default /dev/shm/pts_prof)
+Env: SPARK_GRAFT_CPUS (default: the cores this process may use), PTS_BENCH_OUT (default /dev/shm/pts_prof)
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from processor_post_timeseries_spark.plans.pipeline import (  # noqa: E402
     PipelineConfig,
     run_pipeline,
 )
-from processor_post_timeseries_spark.session import get_spark  # noqa: E402
+from processor_post_timeseries_spark.session import default_cpus, get_spark  # noqa: E402
 from processor_post_timeseries_spark.sources.synth import sequences  # noqa: E402
 
 TIERS = (("1s", 100), ("1m", 60), ("1h", 60))
@@ -42,7 +42,7 @@ def t(label, fn, out, reps=2):
 
 
 def main():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     work = os.environ.get("PTS_BENCH_OUT", "/dev/shm/pts_prof")
     spark = get_spark("pts-profile", master=f"local[{cpus}]")
