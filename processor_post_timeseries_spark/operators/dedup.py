@@ -148,7 +148,9 @@ def minhash_signatures(
             for pdf in batches:
                 ids, sigs = [], []
                 for d, text in zip(pdf[id_col], pdf[text_col]):
-                    words = str(text).split(" ")
+                    if text is None:
+                        continue  # no grams, as in the xxh64 path
+                    words = text.split(" ")
                     m = len(words) - (n - 1)
                     if m <= 0:
                         continue

@@ -7,13 +7,20 @@ cascade itself is new, designed Spark-first.
 Scale design
 ------------
 Each sequence's token stream is one channel, sample index = time. A tier
-window therefore never crosses a row: tier-1 aggregates are a pure
-**narrow map** over the ``tokens`` array (numpy reshape inside an Arrow
-batch), and each higher tier re-aggregates the previous tier's arrays the
-same way — ZERO shuffles for the whole cascade at any scale. Exploding to
+window therefore never crosses a row: every tier is a pure **narrow
+map** — ZERO shuffles for the whole cascade at any scale. Exploding to
 one row per token (10^12+ rows) and shuffling on ``(doc, window)`` would
 be the naive plan; we keep block form end to end. Cross-doc/source stats
 are tiny tier summaries and shuffle only those.
+
+One kernel does every tier: a ``mapInArrow`` that reads a list column
+through its offsets as one flat array per batch (no per-doc Python
+objects) and calls ``_compose`` — the only window composition (min of
+mins, max of maxes, sum of sums, sum of cnts), one ``ufunc.reduceat``
+per stat over the whole batch. Raw tokens enter as windows of one sample,
+so tier 1 and tier k -> k+1 are the same composition; the output lists
+are built back from offsets. ``tier1_from_tokens``, ``cascade_tier``,
+``fused_tiers`` and ``rollup_all_tiers`` are views of that kernel.
 
 Determinism: sums are int64 over int32 tokens (exact, order-free); mean
 is derived at read time as ``sum/cnt`` (never accumulated in float), per
@@ -29,7 +36,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,201 +59,121 @@ TIER_SCHEMA = T.StructType(
 
 DEFAULT_TIERS = (("1s", 100), ("1m", 60), ("1h", 60))  # factors vs previous tier
 
-
-def _window_reduce(a: np.ndarray, w: int, op) -> np.ndarray:
-    """Reduce 1-D array in windows of w (last window ragged)."""
-    n = len(a)
-    full = (n // w) * w
-    head = op(a[:full].reshape(-1, w), axis=1) if full else np.empty(0, a.dtype)
-    if n > full:
-        return np.concatenate([head, [op(a[full:])]])
-    return head
+_STATS = ("mins", "maxs", "sums", "cnts")
+_COLS = [f.name for f in TIER_SCHEMA.fields]
 
 
-def _batch_window_stats(arrays: list[np.ndarray], w: int):
-    """Window min/max/sum/cnt for a whole Arrow batch in FOUR numpy calls.
+def _compose(stats, lens: np.ndarray, w: int):
+    """Compose windows of ``w`` consecutive entries per doc over batch-wide
+    flat arrays: min of mins, max of maxes, sum of sums, sum of cnts.
 
-    Concatenates every doc's values and runs ``ufunc.reduceat`` over the
-    combined window-start boundaries; windows never straddle docs because
-    each doc's offset is itself a boundary. This removes the per-doc
-    Python loop — the difference between interpreter-bound and
-    memory-bound throughput at high core counts.
+    ``stats`` are the four flat int64 arrays, ``lens`` the per-doc entry
+    counts laid end to end. Every doc start is a window start, so a
+    window never straddles docs; a doc's last window may be ragged.
+    Returns the composed stats and the per-doc window counts.
     """
-    starts, nws, total = _window_starts([len(a) for a in arrays], w)
-    if total == 0:
-        empty = np.empty(0, np.int64)
-        return empty, empty, empty, empty, nws
-    vals = np.concatenate(arrays).astype(np.int64, copy=False)
-    mins = np.minimum.reduceat(vals, starts)
-    maxs = np.maximum.reduceat(vals, starts)
-    sums = np.add.reduceat(vals, starts)
-    ends = np.concatenate([starts[1:], [len(vals)]])
-    cnts = ends - starts
-    return mins, maxs, sums, cnts, nws
-
-
-def _window_starts(lengths, w: int):
-    """Combined window-start boundaries for a batch of per-doc arrays laid
-    end to end: returns (starts, per-doc window counts, total windows)."""
-    lens = np.asarray(lengths, dtype=np.int64)
     nws = (lens + w - 1) // w
     total = int(nws.sum())
-    if total == 0:
-        return np.empty(0, np.int64), nws, 0
-    doc_off = np.concatenate([[0], np.cumsum(lens)[:-1]])
-    win_off = np.concatenate([[0], np.cumsum(nws)[:-1]])
-    starts = np.repeat(doc_off, nws) + (np.arange(total) - np.repeat(win_off, nws)) * w
-    return starts, nws, total
+    if not total:
+        return tuple(s[:0] for s in stats), nws
+    # window g of the batch (the j-th of doc i) starts at doc_off[i] + j*w
+    base = (np.cumsum(lens) - lens) - (np.cumsum(nws) - nws) * w
+    starts = np.repeat(base, nws) + np.arange(total, dtype=np.int64) * w
+    mins, maxs, sums, cnts = stats
+    return (
+        np.minimum.reduceat(mins, starts),
+        np.maximum.reduceat(maxs, starts),
+        np.add.reduceat(sums, starts),
+        np.add.reduceat(cnts, starts),
+    ), nws
+
+
+def _lens(col: pa.Array) -> np.ndarray:
+    """Per-row lengths of an Arrow list column (a null list has none)."""
+    return pc.list_value_length(col).fill_null(0).to_numpy().astype(np.int64)
+
+
+def _values(col: pa.Array) -> np.ndarray:
+    """Flat int64 values of an Arrow list column. ``flatten()`` honours the
+    array's offset, so a sliced batch is read correctly (``.values`` would
+    return the whole parent buffer)."""
+    return col.flatten().to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+
+
+def rollup_batch(
+    batch: pa.RecordBatch, tiers: tuple[tuple[str, int], ...], raw: bool
+) -> Iterator[pa.RecordBatch]:
+    """The tier kernel on one Arrow batch: one output batch per tier, tier
+    k composed from tier k-1's flat arrays.
+
+    A ``raw`` batch carries ``tokens`` (each token is a window of one
+    sample: min = max = sum = token, cnt = 1); otherwise it carries tier
+    rows (``window`` and the four stat arrays), e.g. read back from
+    parquet.
+    """
+    n = batch.num_rows
+    if raw:
+        lens, v = _lens(batch.column("tokens")), _values(batch.column("tokens"))
+        stats = (v, v, v, np.ones(len(v), np.int64))
+        window = np.ones(n, np.int64)
+    else:
+        lens = _lens(batch.column("mins"))
+        stats = tuple(_values(batch.column(c)) for c in _STATS)
+        window = batch.column("window").to_numpy().astype(np.int64)
+    for name, w in tiers:
+        stats, lens = _compose(stats, lens, w)
+        window = window * w
+        offsets = pa.array(np.concatenate([[0], np.cumsum(lens)]).astype(np.int32))
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("doc_id"),
+                batch.column("source"),
+                pa.array([name] * n, pa.string()),
+                pa.array(window),
+                pa.array(lens.astype(np.int32)),
+                *(pa.ListArray.from_arrays(offsets, s) for s in stats),
+            ],
+            names=_COLS,
+        )
+
+
+def _map_tiers(df: DataFrame, tiers: tuple[tuple[str, int], ...], raw: bool) -> DataFrame:
+    """``rollup_batch`` as a narrow ``mapInArrow`` over the needed columns."""
+    cols = ["doc_id", "source", *(("tokens",) if raw else ("window", *_STATS))]
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            if b.num_rows:
+                yield from rollup_batch(b, tiers, raw)
+
+    return df.select(*cols).mapInArrow(kernel, TIER_SCHEMA)
 
 
 def tier1_from_tokens(seq_df: DataFrame, window: int, tier: str = "1s") -> DataFrame:
     """Raw -> first tier. Narrow map: no shuffle, no explode."""
-
-    def agg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrays = [np.asarray(t) for t in pdf["tokens"]]
-            mins, maxs, sums, cnts, nws = _batch_window_stats(arrays, window)
-            bounds = np.cumsum(nws)[:-1] if len(nws) else []
-            res = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "source": pdf["source"].values,
-                    "n_windows": nws.astype(np.int32) if len(nws) else nws,
-                    "mins": np.split(mins, bounds),
-                    "maxs": np.split(maxs, bounds),
-                    "sums": np.split(sums, bounds),
-                    "cnts": np.split(cnts, bounds),
-                }
-            )
-            res["tier"] = tier
-            res["window"] = np.int64(window)
-            yield res[[f.name for f in TIER_SCHEMA.fields]]
-
-    return seq_df.mapInPandas(agg, schema=TIER_SCHEMA)
+    return _map_tiers(seq_df, ((tier, window),), raw=True)
 
 
 def cascade_tier(prev: DataFrame, factor: int, tier: str) -> DataFrame:
-    """Tier k -> k+1 by re-aggregating the previous tier's arrays.
-
-    min of mins / max of maxes / sum of sums / sum of cnts — exact
-    composition, still a narrow per-row map.
-    """
-
-    def agg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lens = [len(a) for a in pdf["mins"]]
-            starts, nws, total = _window_starts(lens, factor)
-            col = {}
-            # composition rules: min of mins, max of maxes, sum of sums,
-            # sum of cnts — exact tier-k -> tier-k+1 algebra (A6)
-            for name, ufunc in (
-                ("mins", np.minimum),
-                ("maxs", np.maximum),
-                ("sums", np.add),
-                ("cnts", np.add),
-            ):
-                vals = (
-                    np.concatenate([np.asarray(a) for a in pdf[name]]).astype(np.int64, copy=False)
-                    if total
-                    else np.empty(0, np.int64)
-                )
-                col[name] = ufunc.reduceat(vals, starts) if total else vals
-            bounds = np.cumsum(nws)[:-1] if len(nws) else []
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "source": pdf["source"].values,
-                    "tier": tier,
-                    "window": (pdf["window"].values * factor).astype(np.int64),
-                    "n_windows": nws.astype(np.int32) if len(nws) else nws,
-                    "mins": np.split(col["mins"], bounds),
-                    "maxs": np.split(col["maxs"], bounds),
-                    "sums": np.split(col["sums"], bounds),
-                    "cnts": np.split(col["cnts"], bounds),
-                }
-            )[[f.name for f in TIER_SCHEMA.fields]]
-
-    return prev.mapInPandas(agg, schema=TIER_SCHEMA)
+    """Tier k -> k+1 by re-aggregating the previous tier's arrays (extra
+    columns such as ``tier`` or ``bucket`` are ignored)."""
+    return _map_tiers(prev, ((tier, factor),), raw=False)
 
 
 def fused_tiers(
     seq_df: DataFrame, tiers: tuple[tuple[str, int], ...] = DEFAULT_TIERS
 ) -> DataFrame:
-    """ALL retention tiers in one narrow pass (rows tagged by ``tier``).
-
-    Semantics identical to ``rollup_all_tiers`` — tier k+1 is composed
-    from tier k's arrays (min-of-mins / max-of-maxes / sum-of-sums /
-    sum-of-cnts) inside the same kernel — but the plan touches the raw
-    ``tokens`` exactly once and produces one output, so the pipeline
-    needs one write job instead of three chained write+read-backs.
-    That read-amplification difference is the scaling-efficiency lever:
-    serial per-job overhead happens once.
-    """
-
-    def agg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TIER_SCHEMA.fields]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrays = [np.asarray(t) for t in pdf["tokens"]]
-            frames = []
-            window = 1
-            cur = None  # (mins, maxs, sums, cnts, nws)
-            for name, factor in tiers:
-                window *= factor
-                if cur is None:
-                    cur = _batch_window_stats(arrays, factor)
-                else:
-                    mins0, maxs0, sums0, cnts0, nws0 = cur
-                    starts, nws, total = _window_starts(nws0, factor)
-                    bounds0 = np.cumsum(nws0)[:-1]
-                    # previous tier's arrays are already concatenated
-                    # batch-wide; reduceat composes them directly
-                    cur = (
-                        np.minimum.reduceat(mins0, starts) if total else mins0[:0],
-                        np.maximum.reduceat(maxs0, starts) if total else maxs0[:0],
-                        np.add.reduceat(sums0, starts) if total else sums0[:0],
-                        np.add.reduceat(cnts0, starts) if total else cnts0[:0],
-                        nws,
-                    )
-                    del bounds0
-                mins, maxs, sums, cnts, nws = cur
-                bounds = np.cumsum(nws)[:-1] if len(nws) else []
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": pdf["doc_id"].values,
-                            "source": pdf["source"].values,
-                            "tier": name,
-                            "window": np.int64(window),
-                            "n_windows": nws.astype(np.int32) if len(nws) else nws,
-                            "mins": np.split(mins, bounds),
-                            "maxs": np.split(maxs, bounds),
-                            "sums": np.split(sums, bounds),
-                            "cnts": np.split(cnts, bounds),
-                        }
-                    )[cols]
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return seq_df.mapInPandas(agg, schema=TIER_SCHEMA)
+    """ALL retention tiers in one narrow pass over the raw ``tokens``, rows
+    tagged by ``tier``; the pipeline writes them with one job."""
+    return _map_tiers(seq_df, tiers, raw=True)
 
 
 def rollup_all_tiers(
     seq_df: DataFrame, tiers: tuple[tuple[str, int], ...] = DEFAULT_TIERS
 ) -> dict[str, DataFrame]:
-    """Full cascade. Returns {tier_name: tier_df}. Each tier derives from
-    the previous (never recomputed from raw), per the north rule."""
-    out: dict[str, DataFrame] = {}
-    prev: DataFrame | None = None
-    for name, factor in tiers:
-        prev = tier1_from_tokens(seq_df, factor, name) if prev is None else cascade_tier(prev, factor, name)
-        out[name] = prev
-    return out
+    """Full cascade as {tier_name: tier_df}; each tier is composed from the
+    previous one (never recomputed from raw), per the north rule."""
+    return {name: fused_tiers(seq_df, tiers).filter(F.col("tier") == name) for name, _f in tiers}
 
 
 def tier_points(tier_df: DataFrame) -> DataFrame:

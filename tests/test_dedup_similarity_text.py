@@ -241,6 +241,17 @@ def test_minhash_xxh64_matches_md5_pair_set(spark):
     assert md5_pairs == x64_pairs
 
 
+def test_minhash_md5_skips_null_text(spark):
+    """A NULL text has no grams in either hash family: the md5 kernel must
+    not sign it as the word "None"."""
+    docs = spark.createDataFrame(
+        [("a", "one two three"), ("b", None), ("c", "None")], "doc_id string, text string"
+    )
+    for fn in ("md5", "xxh64"):
+        got = {r["doc_id"] for r in minhash_signatures(docs, 4, n=1, hash_fn=fn).collect()}
+        assert got == {"a", "c"}, fn
+
+
 def test_simhash_vectorized_reference(spark):
     """Golden: the batch-vectorized simhash matches an independent
     per-doc reimplementation of Charikar sign-votes over md5 bits."""

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from processor_post_timeseries_spark.plans import lineage
+from processor_post_timeseries_spark.plans import lineage, pipeline
 from processor_post_timeseries_spark.plans.backfill import invalidate_units, invalidate_where
 from processor_post_timeseries_spark.plans.pipeline import PipelineConfig, run_pipeline
 from processor_post_timeseries_spark.sources.synth import sequences
@@ -68,27 +68,30 @@ def test_fresh_pipeline_writes_tiers_with_one_task_per_core(spark, tmp_path, mon
     not coalesce the small tier rows into one task."""
     sc = spark.sparkContext
     tracker, group = sc.statusTracker(), "tier-write-tasks"
-    marks = {}
-    record = lineage.record_stage
+    write, record = pipeline._write_stage, lineage.record_stage
 
-    def spy(spark_, root, stage, *a, **kw):
-        marks[f"{stage}-start"] = set(tracker.getJobIdsForGroup(group))
-        res = record(spark_, root, stage, *a, **kw)
-        marks[f"{stage}-end"] = set(tracker.getJobIdsForGroup(group))
-        return res
+    def clear_group():
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
 
-    monkeypatch.setattr(lineage, "record_stage", spy)
+    def spy_write(spark_, cfg, stage, *a, **kw):
+        # job properties are per thread: only the tiers stage's jobs join
+        if stage == "tiers":
+            sc.setJobGroup(group, "tier write")
+        try:
+            return write(spark_, cfg, stage, *a, **kw)
+        finally:
+            clear_group()
+
+    def spy_record(spark_, root, stage, *a, **kw):
+        clear_group()  # the lineage jobs are not the write
+        return record(spark_, root, stage, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "_write_stage", spy_write)
+    monkeypatch.setattr(lineage, "record_stage", spy_record)
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 4
-    sc.setJobGroup(group, "fresh pipeline run")
-    try:
-        _run(spark, str(tmp_path / "t"), resume=False, concurrent_stages=False,
-             async_lineage=False, n_docs=60)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # serial stages: the jobs between the blocks lineage record and the
-    # tiers lineage record are the tier stage's write
-    write_jobs = sorted(marks["tiers-start"] - marks["blocks-end"])
+    _run(spark, str(tmp_path / "t"), resume=False, n_docs=60)
+    write_jobs = sorted(tracker.getJobIdsForGroup(group))
     assert write_jobs
     result_stage = max(tracker.getJobInfo(write_jobs[-1]).stageIds)
     info = tracker.getStageInfo(result_stage)

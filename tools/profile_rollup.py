@@ -113,19 +113,16 @@ def main():
 
     t("lineage_readback_blocks", lineage_like, out)
 
-    # full pipeline, concurrent vs serial
-    def full(concurrent):
+    def full():
         shutil.rmtree(f"{work}/out", ignore_errors=True)
         run_pipeline(
             spark, seq,
             PipelineConfig(out_dir=f"{work}/out", block_size=131_072,
                            n_buckets=max(cpus, 8), tiers=TIERS, run_id="prof",
-                           resume=False, fused_ingest=False,
-                           concurrent_stages=concurrent),
+                           resume=False),
         )
 
-    t("full_concurrent", lambda: full(True), out)
-    t("full_serial", lambda: full(False), out)
+    t("full_pipeline", full, out)
 
     print(json.dumps(out))
     spark.stop()
